@@ -334,22 +334,24 @@ def domain_metrics_full(labeled: DataFrame, n_salts: int = N_SALTS) -> DataFrame
     "per-partition lineage and stage metrics"): per-domain mean KenLM-style
     perplexity and n-gram coherence joined onto the keep/drop stats.
 
-    Shuffle shape at 100 TB: the per-doc signals are map-side-ish (ppl and
-    coherence each need one stats-broadcast pass over the docs), the domain
-    rollup reuses the SAME salted two-level aggregation as domain_metrics
-    (Zipf-head domains split across n_salts reducers), and the final join
-    is domain-cardinality — tiny, broadcast by AQE."""
-    from harvesttext_spark.operators.lm_perplexity import perplexity_signal
+    ``labeled`` is a quality_filter_full output: ``avg_ppl`` is the mean
+    of its per-doc ``ppl`` column, the perplexity the filter's self-trained
+    LM gave each doc, so this rollup trains no second LM over the same
+    corpus.
+
+    Shuffle shape at 100 TB: coherence needs one stats-broadcast pass over
+    the docs, the domain rollup reuses the SAME salted two-level
+    aggregation as domain_metrics (Zipf-head domains split across n_salts
+    reducers), and the final join is domain-cardinality — tiny, broadcast
+    by AQE."""
     from harvesttext_spark.operators.word_discovery import doc_coherence
 
     base = domain_metrics(labeled, n_salts)
     docs = labeled.select(
         F.col("url").alias("doc_id"), F.col("text_clean").alias("text")
     )
-    sig = (
-        perplexity_signal(docs)
-        .select("doc_id", "ppl")
-        .join(doc_coherence(docs).select("doc_id", "mean_log_agg"), "doc_id", "left")
+    sig = labeled.select(F.col("url").alias("doc_id"), "ppl").join(
+        doc_coherence(docs).select("doc_id", "mean_log_agg"), "doc_id", "left"
     )
     salted = sig.select(
         domain_col("doc_id").alias("domain"),

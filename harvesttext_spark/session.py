@@ -1,11 +1,18 @@
 """SparkSession factory with the engine's standard configuration.
 
-All knobs chosen for correctness-vs-oracle and 100TB-scale hygiene:
+Every entry point (library callers, tools, the flagship job) builds its
+session here.  Knobs chosen for correctness-vs-oracle and 100TB-scale
+hygiene:
   * Arrow exchange on (every Python stage is Arrow-batched, never per-row).
   * AQE on (runtime coalescing + skew-join splitting).
   * UTC session timezone (parity with DuckDB oracle timestamps).
-  * shuffle partitions sized to cores for local mode; a real cluster job
-    overrides via ``spark-submit --conf`` (we never hardcode 200).
+  * shuffle partitions = the session's defaultParallelism (one per core
+    in local mode), never Spark's fixed 200: AQE cannot coalesce the
+    output of a persisted plan, so every scan of a plan-keyed persist
+    runs as many tasks as the shuffle that built it.
+
+Under ``spark-submit`` the launcher's ``--master`` and ``--conf`` values
+win over these defaults; see get_spark.
 """
 
 from __future__ import annotations
@@ -13,7 +20,10 @@ from __future__ import annotations
 import os
 import threading
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def get_spark(
@@ -24,34 +34,53 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver convention);
-    on a real cluster, pass ``None`` and let spark-submit own the master.
+    Each setting comes from the first of: an explicit argument
+    (``master``, ``shuffle_partitions``, ``extra_conf``); the value a
+    launcher set (``spark-submit --master/--conf``, which starts the JVM
+    before this runs and hands over its port in PYSPARK_GATEWAY_PORT);
+    the engine default.  The default master is ``local[$SPARK_GRAFT_CPUS]``;
+    the default shuffle partition count is the session's
+    ``defaultParallelism``.  On a cluster, executors may not
+    have registered when the session starts, so pass
+    ``--conf spark.sql.shuffle.partitions=N`` there.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # one shuffle partition per core locally; clusters override.
-        n = master.split("[")[-1].rstrip("]") if "[" in master else str(cpus)
-        shuffle_partitions = cpus if n == "*" else int(n)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    conf = {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.session.timeZone": "UTC",
+        # a no-op under a launcher (the JVM is already up); plain-python
+        # runs need more than the 1g default for the LM stage and for
+        # CacheManager's plan normalization over chained persists
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.ui.enabled": "false",
+    }
+    launched: set[str] = set()
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # connect to the launcher's JVM to read its settings; in plain
+        # python this would start the JVM before spark.driver.memory
+        # reached it, hence the guard
+        SparkContext._ensure_initialized()
+        launched = {k for k, _ in SparkConf().getAll()}
+    conf = {k: v for k, v in conf.items() if k not in launched}
+    if master is not None:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf[SHUFFLE_PARTITIONS] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if SHUFFLE_PARTITIONS not in conf and SHUFFLE_PARTITIONS not in launched:
+        spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 TABLES = (

@@ -1562,24 +1562,9 @@ def main(argv=None) -> None:
 
     import os
 
-    from pyspark.sql import SparkSession
+    from harvesttext_spark.session import get_spark
 
-    builder = (
-        SparkSession.builder.appName("ht_quality_filter")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    # cluster runs size the driver via spark-submit (the JVM is already
-    # up there, so this config is a no-op); it only affects plain-python
-    # smoke runs, where the 1g default OOMs the LM stage — and, with 6+
-    # dedup pre-passes chained, even CacheManager's plan normalization
-    # (each _stage persist re-walks the full upstream analyzed tree).
-    # Default to the same 8g as harvesttext_spark.session.get_spark.
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
-    )
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="ht_quality_filter")
 
     if args.synthesize:
         from harvesttext_spark.pipeline.pages import synthesize_pages

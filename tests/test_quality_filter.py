@@ -135,24 +135,78 @@ def test_latin_corpus_f1_and_bytes_with_fast_path(spark):
 
 def test_domain_metrics_full(spark):
     """Per-domain model rollups (avg ppl / coherence) join onto the salted
-    keep/drop stats; every domain row survives the left join and domains
-    with scorable docs get finite averages."""
-    from harvesttext_spark.pipeline.pages import synthesize_pages
+    keep/drop stats; every domain row survives the left join, and avg_ppl
+    is each domain's mean of the ppl column quality_filter_full wrote (no
+    second LM)."""
+    import math
+
     from harvesttext_spark.pipeline.quality_filter import (
-        domain_metrics,
+        domain_col,
         domain_metrics_full,
-        quality_filter,
+        quality_filter_full,
     )
 
-    labeled = quality_filter(synthesize_pages(spark, n=400, seed=11))
+    labeled = quality_filter_full(
+        synthesize_pages(spark, n=400, seed=11), ppl_threshold=1000
+    )
     base = {r["domain"] for r in domain_metrics(labeled).collect()}
     rows = domain_metrics_full(labeled).collect()
     assert {r["domain"] for r in rows} == base
-    assert all("avg_ppl" in r.asDict() and "avg_coherence" in r.asDict() for r in rows)
-    scored = [r for r in rows if r["avg_ppl"] is not None]
-    assert scored, "no domain received a perplexity rollup"
-    for r in scored:
-        assert r["avg_ppl"] > 0
+    assert all("avg_coherence" in r.asDict() for r in rows)
+    ppls = {}
+    for r in labeled.select(domain_col().alias("domain"), "ppl").collect():
+        if r["ppl"] is not None:
+            ppls.setdefault(r["domain"], []).append(r["ppl"])
+    assert ppls, "no doc received a perplexity"
+    for r in rows:
+        want = ppls.get(r["domain"])
+        if want is None:
+            assert r["avg_ppl"] is None, r
+        else:
+            assert r["avg_ppl"] == pytest.approx(
+                math.fsum(want) / len(want), rel=1e-12
+            ), r["domain"]
+
+
+def test_quality_filter_full_partition_invariant(spark):
+    """The full-mode output does not depend on the shuffle partition count
+    (the job's session sizes it to the cores): 3 and 7 partitions give the
+    same labels and scrubbed text, and the same ppl up to the float
+    summation order."""
+    from harvesttext_spark.pipeline.quality_filter import quality_filter_full
+    from harvesttext_spark.session import SHUFFLE_PARTITIONS, clear_persist_slots
+
+    def run(n):
+        # cold caches: a plan-keyed persist built at the other count
+        # would otherwise be reused
+        clear_persist_slots()
+        spark.conf.set(SHUFFLE_PARTITIONS, str(n))
+        out = quality_filter_full(
+            synthesize_pages(spark, 400, seed=11),
+            ppl_threshold=1000,
+            repetition_rules=True,
+        )
+        return {
+            r["url"]: r
+            for r in out.select("url", "keep", "drop_reason", "text_clean", "ppl").collect()
+        }
+
+    prev = spark.conf.get(SHUFFLE_PARTITIONS)
+    try:
+        a, b = run(3), run(7)
+    finally:
+        clear_persist_slots()
+        spark.conf.set(SHUFFLE_PARTITIONS, prev)
+    assert len(a) == 400 and a.keys() == b.keys()
+    cols = ("keep", "drop_reason", "text_clean")
+    assert {u: tuple(r[c] for c in cols) for u, r in a.items()} == {
+        u: tuple(r[c] for c in cols) for u, r in b.items()
+    }
+    for u, r in a.items():
+        if r["ppl"] is None:
+            assert b[u]["ppl"] is None, u
+        else:
+            assert b[u]["ppl"] == pytest.approx(r["ppl"], rel=1e-12), u
 
 
 def test_qf_probe_rows_cover_every_reason(spark):

@@ -63,8 +63,10 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            out_path = f"{os.path.dirname(args.plan_out)}/{name}_{os.path.basename(args.plan_out)}.txt"
-            os.makedirs(os.path.dirname(out_path), exist_ok=True)
+            # a bare suffix has no directory part: write beside the cwd
+            plan_dir = os.path.dirname(args.plan_out) or "."
+            out_path = os.path.join(plan_dir, f"{name}_{os.path.basename(args.plan_out)}.txt")
+            os.makedirs(plan_dir, exist_ok=True)
             with open(out_path, "w") as f:
                 f.write(buf.getvalue())
             print(f"# plan -> {out_path}", file=sys.stderr)
