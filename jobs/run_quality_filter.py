@@ -61,18 +61,28 @@ def apply_pre_passes(
     an unmaterialized chain recomputes upstream lineage once per branch
     — MULTIPLICATIVELY across stages (measured at 1.2M pages,
     local[32]: the lazy chain ran the full pipeline 50x slower than the
-    filter alone).  Each stage is persisted SERIALIZED, eagerly
-    counted, and the previous stage is released — memory stays bounded
-    at ~one stage table (holding all four deserialized blew an 8g heap
-    at 1.2M pages).  This is also how a real 100 TB pipeline runs: each
-    pre-pass output is a checkpointed table, not live lineage — and
-    ``stage_dir`` (job flag ``--stage-dir``) makes that literal: each
-    stage writes parquet under it and is re-read, a TRUE lineage cut.
-    Unlike persist, the analyzed plan then stays O(1) per stage (each
-    persist-shape stage re-walks the full upstream tree — plan
-    normalization alone OOM'd a 1g driver at 6 chained stages), the
-    stage tables survive the session for debugging/lineage audits, and
-    memory holds zero cached stages."""
+    filter alone).
+
+    THE CUT MUST TRUNCATE LINEAGE, not just cache: a persisted stage
+    keeps its whole upstream plan, so every later plan embeds every
+    earlier one through each of its branches and grows multiplicatively
+    (every flag on, 200 synthesized pages, local[4]: persisted stages
+    left a 640K-char analyzed plan, 1.5 GB of heap in use and took
+    123 s; checkpointed ones a 67-char leaf, 0.18 GB and 21 s; at a 2g
+    heap the persisted chain ran out of heap).  In memory, each
+    stage is an eager localCheckpoint() — blocks on the executors, a
+    leaf plan — and the previous stage's blocks are released once the
+    next one is materialized, so memory stays bounded at ~one stage
+    table (holding all four deserialized blew an 8g heap at 1.2M
+    pages).  A released checkpoint cannot be recomputed, so a stage is
+    released only when nothing built later still reads it (the nulls
+    split below is cached on its own first).  This is also how a real
+    100 TB pipeline runs: each pre-pass output is a checkpointed table,
+    not live lineage — and ``stage_dir`` (job flag ``--stage-dir``)
+    makes that durable: each stage writes parquet under it and is
+    re-read, so the stage tables survive executor loss and the session
+    (for debugging/lineage audits), and memory holds zero cached
+    stages.  On a lossy cluster pass --stage-dir."""
     from pyspark import StorageLevel
 
     _prev = [None]
@@ -84,10 +94,10 @@ def apply_pre_passes(
             _n[0] += 1
             df.write.mode("overwrite").parquet(path)
             return df.sparkSession.read.parquet(path)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)  # serialized
-        df.count()  # materialize now so the previous stage can release
+        df = df.localCheckpoint(eager=True)
         if _prev[0] is not None:
-            _prev[0].unpersist()
+            # nothing built later reads it (see the docstring)
+            _prev[0]._jdf.queryExecution().logical().rdd().unpersist(False)
         _prev[0] = df
         return df
 
@@ -163,8 +173,8 @@ def apply_pre_passes(
 
         nn = pages.filter(F.col("text").isNotNull())
         # materialize the (tiny) null-text split BEFORE _stage releases
-        # its parent — otherwise the union branch recomputes the whole
-        # upstream chain just to re-find the html-only rows
+        # its parent — otherwise the union branch would read a released
+        # checkpoint to re-find the html-only rows
         nulls = pages.filter(F.col("text").isNull()).persist(
             StorageLevel.MEMORY_AND_DISK
         )

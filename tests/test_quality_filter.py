@@ -1104,6 +1104,26 @@ def test_stage_dir_lineage_cut_matches_persist_path(spark, tmp_path):
     assert spark.read.parquet(sd + "/" + stages[0]).count() > 0
 
 
+def test_in_memory_pre_passes_cut_lineage(spark):
+    """Without --stage-dir every pre-pass stage still truncates lineage:
+    the result's logical plan is a leaf, not the upstream tree.  Persisted
+    stages kept that tree in every later plan (a 640K-char analyzed plan
+    on this input), until plan analysis alone ran a 2g driver out of
+    heap."""
+    from harvesttext_spark.pipeline import synthesize_pages
+    from jobs.run_quality_filter import apply_pre_passes
+
+    pages = synthesize_pages(spark, n=200, seed=17)
+    out = apply_pre_passes(
+        pages, fix_mojibake=True, url_dedup=True, boilerplate_min_df=3,
+        dedup_paragraphs=True, cut_dup_spans=8, exact_dedup=True,
+        minhash_jaccard=0.8,
+    )
+    plan = out._jdf.queryExecution().logical()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert out.count() > 0
+
+
 def test_hash_split_deterministic_and_leakage_safe(spark):
     """Curation split contract: membership is a pure function of (id,
     seed) — identical across partitionings and runs; fractions land
