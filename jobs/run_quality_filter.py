@@ -20,8 +20,57 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
+
+
+class _Cuts:
+    """One sequence of lineage cuts: ``cut(df)`` materializes ``df`` and
+    returns a frame whose plan is a leaf over the result.  With
+    ``stage_dir`` it writes parquet to ``stage_dir/<prefix>_NN`` and
+    re-reads it (durable, auditable); otherwise it takes an eager
+    localCheckpoint() and releases the previous cut of this sequence once
+    the new one is materialized.  A released checkpoint cannot be
+    recomputed, so the caller cuts only where nothing built later still
+    reads the previous cut.  Each cut prints one numbered stderr line with
+    its wall time: the cut materializes the whole stage, so that is the
+    stage's cost."""
+
+    def __init__(self, stage_dir, prefix):
+        self.stage_dir, self.prefix = stage_dir, prefix
+        self.n = 0
+        self.prev = None
+
+    def __call__(self, df):
+        t0 = time.time()
+        name = f"{self.prefix}_{self.n:02d}"
+        self.n += 1
+        if self.stage_dir is not None:
+            path = f"{self.stage_dir}/{name}"
+            df.write.mode("overwrite").parquet(path)
+            out = df.sparkSession.read.parquet(path)
+        else:
+            out = df.localCheckpoint(eager=True)
+            if self.prev is not None:
+                self.prev._jdf.queryExecution().logical().rdd().unpersist(False)
+            self.prev = out
+        print(f"# {name}: {time.time() - t0:.1f}s", file=sys.stderr, flush=True)
+        return out
+
+
+def _drop_kept(df, *rules):
+    """Every drop stage's relabel: a row still kept takes the reason of the
+    first ``(condition, reason)`` rule it meets as its drop_reason, and
+    keep follows drop_reason (NULL = kept)."""
+    from pyspark.sql import functions as F
+
+    reason = F  # F.when starts the CASE, Column.when extends it
+    for cond, name in rules:
+        reason = reason.when(F.col("keep") & cond, F.lit(name))
+    return df.withColumn(
+        "drop_reason", reason.otherwise(F.col("drop_reason"))
+    ).withColumn("keep", F.col("drop_reason").isNull())
 
 
 def apply_pre_passes(
@@ -85,21 +134,7 @@ def apply_pre_passes(
     stages.  On a lossy cluster pass --stage-dir."""
     from pyspark import StorageLevel
 
-    _prev = [None]
-    _n = [0]
-
-    def _stage(df):
-        if stage_dir is not None:
-            path = f"{stage_dir}/stage_{_n[0]:02d}"
-            _n[0] += 1
-            df.write.mode("overwrite").parquet(path)
-            return df.sparkSession.read.parquet(path)
-        df = df.localCheckpoint(eager=True)
-        if _prev[0] is not None:
-            # nothing built later reads it (see the docstring)
-            _prev[0]._jdf.queryExecution().logical().rdd().unpersist(False)
-        _prev[0] = df
-        return df
+    cut = _Cuts(stage_dir, "stage")
 
     if fix_mojibake:
         from pyspark.sql import functions as F
@@ -113,7 +148,7 @@ def apply_pre_passes(
     if url_dedup:
         from harvesttext_spark.operators.dedup import drop_url_dups
 
-        pages = _stage(drop_url_dups(pages))
+        pages = cut(drop_url_dups(pages))
     if boilerplate_min_df is not None:
         from pyspark.sql import functions as F
 
@@ -123,11 +158,11 @@ def apply_pre_passes(
         )
 
         if not url_dedup:
-            pages = _stage(drop_url_dups(pages, canonicalize=False))
+            pages = cut(drop_url_dups(pages, canonicalize=False))
         cleaned = drop_boilerplate_lines(
             pages, text_col="text", id_col="url", min_df=boilerplate_min_df
         ).withColumnRenamed("text_clean", "_debo")
-        pages = _stage(
+        pages = cut(
             pages.join(cleaned, "url", "left")
             .withColumn("text", F.coalesce("_debo", "text"))
             .drop("_debo")
@@ -141,8 +176,8 @@ def apply_pre_passes(
         # paragraph census keys (url, pos) — input must be url-unique
         # (same precondition and guard as the boilerplate stage)
         if not url_dedup and boilerplate_min_df is None:
-            pages = _stage(drop_url_dups(pages, canonicalize=False))
-        pages = _stage(
+            pages = cut(drop_url_dups(pages, canonicalize=False))
+        pages = cut(
             drop_duplicate_paragraphs(pages, text_col="text", id_col="url")
             .drop("text")
             .withColumnRenamed("text_dedup", "text")
@@ -156,8 +191,8 @@ def apply_pre_passes(
         # span census groups windows by url — input must be url-unique
         # (same precondition and guard as the boilerplate stage)
         if not url_dedup and boilerplate_min_df is None and not dedup_paragraphs:
-            pages = _stage(drop_url_dups(pages, canonicalize=False))
-        pages = _stage(
+            pages = cut(drop_url_dups(pages, canonicalize=False))
+        pages = cut(
             cut_duplicate_spans(pages, k=cut_dup_spans, text_col="text", id_col="url")
             .drop("text")
             .withColumnRenamed("text_dedup", "text")
@@ -172,7 +207,7 @@ def apply_pre_passes(
         )
 
         nn = pages.filter(F.col("text").isNotNull())
-        # materialize the (tiny) null-text split BEFORE _stage releases
+        # materialize the (tiny) null-text split BEFORE the cut releases
         # its parent — otherwise the union branch would read a released
         # checkpoint to re-find the html-only rows
         nulls = pages.filter(F.col("text").isNull()).persist(
@@ -180,7 +215,7 @@ def apply_pre_passes(
         )
         nulls.count()
         if exact_dedup:
-            nn = _stage(drop_exact_dups(nn, text_col="text", id_col="url"))
+            nn = cut(drop_exact_dups(nn, text_col="text", id_col="url"))
         if minhash_jaccard is not None:
             pairs = minhash_dup_pairs(
                 nn, text_col="text", id_col="url", min_jaccard=minhash_jaccard,
@@ -190,7 +225,7 @@ def apply_pre_passes(
         # materialize the union through the stage protocol, then release
         # the nulls split too — without this its cache lingered for the
         # whole job, eroding the bounded-memory contract stated above
-        pages = _stage(nn.unionByName(nulls))
+        pages = cut(nn.unionByName(nulls))
         nulls.unpersist()
     return pages
 
@@ -208,15 +243,10 @@ def apply_toxicity_filter(labeled, terms, max_toxicity, text_col="text_clean"):
 
     return (
         labeled.withColumn("toxicity", toxicity_udf(terms)(F.col(text_col)))
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep")
-                & (F.coalesce(F.col("toxicity"), F.lit(0.0)) > max_toxicity),
-                F.lit("toxicity"),
-            ).otherwise(F.col("drop_reason")),
+        .transform(
+            _drop_kept,
+            (F.coalesce(F.col("toxicity"), F.lit(0.0)) > max_toxicity, "toxicity"),
         )
-        .withColumn("keep", F.col("drop_reason").isNull())
     )
 
 
@@ -238,15 +268,13 @@ def apply_script_mix_filter(labeled, min_dominant_frac, text_col="text_clean"):
     return (
         labeled.withColumn("dominant_script", sig["dominant_script"])
         .withColumn("dominant_frac", F.round(sig["dominant_frac"], 6))
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep")
-                & (F.coalesce(F.col("dominant_frac"), F.lit(0.0)) < min_dominant_frac),
-                F.lit("script_mix"),
-            ).otherwise(F.col("drop_reason")),
+        .transform(
+            _drop_kept,
+            (
+                F.coalesce(F.col("dominant_frac"), F.lit(0.0)) < min_dominant_frac,
+                "script_mix",
+            ),
         )
-        .withColumn("keep", F.col("drop_reason").isNull())
     )
 
 
@@ -273,18 +301,12 @@ def apply_c4_line_filter(
         .withColumn("_c4_brace", sig["has_curly"])
         .withColumn("_c4_lorem", sig["has_lorem_ipsum"])
     )
-    df = df.withColumn(
-        "drop_reason",
-        F.when(
-            F.col("keep") & F.col("_c4_brace"), F.lit("c4_brace")
-        )
-        .when(F.col("keep") & F.col("_c4_lorem"), F.lit("c4_lorem"))
-        .when(
-            F.col("keep") & (F.col("_c4_sent") < min_sentences),
-            F.lit("c4_short_page"),
-        )
-        .otherwise(F.col("drop_reason")),
-    ).withColumn("keep", F.col("drop_reason").isNull())
+    df = _drop_kept(
+        df,
+        (F.col("_c4_brace"), "c4_brace"),
+        (F.col("_c4_lorem"), "c4_lorem"),
+        (F.col("_c4_sent") < min_sentences, "c4_short_page"),
+    )
     return (
         df.withColumn(
             text_col,
@@ -326,23 +348,12 @@ def apply_fineweb_filter(
         .withColumn("fineweb_dup_frac", sig["frac_chars_dup_lines"])
         .drop("_fw_lines")
     )
-    df = df.withColumn(
-        "drop_reason",
-        F.when(
-            F.col("keep") & ~(F.col("fineweb_punct_frac") > punct_ratio),
-            F.lit("fineweb_punct"),
-        )
-        .when(
-            F.col("keep") & (F.col("fineweb_short_frac") >= short_ratio),
-            F.lit("fineweb_short_lines"),
-        )
-        .when(
-            F.col("keep") & (F.col("fineweb_dup_frac") >= dup_ratio),
-            F.lit("fineweb_dup_lines"),
-        )
-        .otherwise(F.col("drop_reason")),
-    ).withColumn("keep", F.col("drop_reason").isNull())
-    return df
+    return _drop_kept(
+        df,
+        (~(F.col("fineweb_punct_frac") > punct_ratio), "fineweb_punct"),
+        (F.col("fineweb_short_frac") >= short_ratio, "fineweb_short_lines"),
+        (F.col("fineweb_dup_frac") >= dup_ratio, "fineweb_dup_lines"),
+    )
 
 
 def apply_dsir_select(labeled, target, keep_frac, seed=42):
@@ -382,14 +393,7 @@ def apply_dsir_select(labeled, target, keep_frac, seed=42):
     )
     return (
         labeled.join(flags, labeled["url"] == flags["_durl"], "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & ~F.coalesce(F.col("_dkeep"), F.lit(True)),
-                F.lit("dsir"),
-            ).otherwise(F.col("drop_reason")),
-        )
-        .withColumn("keep", F.col("drop_reason").isNull())
+        .transform(_drop_kept, (~F.coalesce(F.col("_dkeep"), F.lit(True)), "dsir"))
         .drop("_durl", "_dkeep")
     )
 
@@ -418,14 +422,10 @@ def apply_cross_snapshot_dedup(labeled, index_path, text_col="text_clean"):
     ).select(F.col("id").alias("_xurl"), "cross_dup")
     return (
         labeled.join(flags, labeled["url"] == flags["_xurl"], "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & F.coalesce(F.col("cross_dup"), F.lit(False)),
-                F.lit("cross_snapshot_dup"),
-            ).otherwise(F.col("drop_reason")),
+        .transform(
+            _drop_kept,
+            (F.coalesce(F.col("cross_dup"), F.lit(False)), "cross_snapshot_dup"),
         )
-        .withColumn("keep", F.col("drop_reason").isNull())
         .drop("_xurl", "cross_dup")
     )
 
@@ -458,17 +458,9 @@ def apply_domain_reputation_filter(labeled, min_rate, prior_strength=None):
         keep_col="keep",
         prior_strength=PRIOR_STRENGTH if prior_strength is None else prior_strength,
     )
-    return (
-        df.withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & ~F.col("domain_reputation_keep"),
-                F.lit("domain_reputation"),
-            ).otherwise(F.col("drop_reason")),
-        )
-        .withColumn("keep", F.col("drop_reason").isNull())
-        .drop("_dr_domain", "domain_reputation_keep")
-    )
+    return _drop_kept(
+        df, (~F.col("domain_reputation_keep"), "domain_reputation")
+    ).drop("_dr_domain", "domain_reputation_keep")
 
 
 def apply_quality_classifier(
@@ -568,14 +560,7 @@ def apply_quality_classifier(
     )
     return (
         labeled.join(scored, labeled["url"] == scored["_qurl"], "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & drop_pred,
-                F.lit("quality_classifier"),
-            ).otherwise(F.col("drop_reason")),
-        )
-        .withColumn("keep", F.col("drop_reason").isNull())
+        .transform(_drop_kept, (drop_pred, "quality_classifier"))
         .drop("_qurl", "quality_lodds")
     )
 
@@ -621,15 +606,10 @@ def apply_edu_filter(labeled, teacher_path, min_score, text_col="text_clean"):
     ).select(F.col("doc_id").alias("_eurl"), "edu_score", "edu_int")
     return (
         labeled.join(scored, labeled["url"] == scored["_eurl"], "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep")
-                & (F.coalesce(F.col("edu_int"), F.lit(0)) < min_score),
-                F.lit("edu_score"),
-            ).otherwise(F.col("drop_reason")),
+        .transform(
+            _drop_kept,
+            (F.coalesce(F.col("edu_int"), F.lit(0)) < min_score, "edu_score"),
         )
-        .withColumn("keep", F.col("drop_reason").isNull())
         .drop("_eurl", "edu_int")
     )
 
@@ -718,14 +698,10 @@ def apply_semdedup(
     ).select(F.col("vec_id").alias("_surl"), "semdedup_keep")
     return (
         labeled.join(flags, labeled["url"] == flags["_surl"], "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & ~F.coalesce(F.col("semdedup_keep"), F.lit(True)),
-                F.lit("semantic_dup"),
-            ).otherwise(F.col("drop_reason")),
+        .transform(
+            _drop_kept,
+            (~F.coalesce(F.col("semdedup_keep"), F.lit(True)), "semantic_dup"),
         )
-        .withColumn("keep", F.col("drop_reason").isNull())
         .drop("_surl", "semdedup_keep")
     )
 
@@ -760,14 +736,7 @@ def apply_mixture(labeled, spec_path):
     ).select(F.col("url").alias("_murl"), "mix_keep", "mix_copies")
     return (
         labeled.join(flags, labeled["url"] == flags["_murl"], "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & ~F.coalesce(F.col("mix_keep"), F.lit(True)),
-                F.lit("mixture"),
-            ).otherwise(F.col("drop_reason")),
-        )
-        .withColumn("keep", F.col("drop_reason").isNull())
+        .transform(_drop_kept, (~F.coalesce(F.col("mix_keep"), F.lit(True)), "mixture"))
         # epoch-repeat count survives to the output (export explodes by
         # it when max_repeat > 1); dropped rows carry NULL
         .withColumn(
@@ -867,7 +836,103 @@ def build_pack_manifest(labeled, max_tokens, tokenizer="ws", bpe_merges=8000):
     )
 
 
-def build_policy_fn(args, parser=None):
+def _dsir_stage(labeled, args):
+    from pyspark.sql import functions as F
+
+    target = labeled.sparkSession.read.parquet(args.dsir_target_path)
+    tcol = "text_clean" if "text_clean" in target.columns else "text"
+    target = target.select(F.col(tcol).alias("text_clean"))
+    return apply_dsir_select(labeled, target, args.dsir_keep_frac)
+
+
+def _mix_repeats(args):
+    """Whether --mixture-spec up-samples (max_repeat > 1)."""
+    if args.mixture_spec is None:
+        return False
+    with open(args.mixture_spec, encoding="utf-8") as fh:
+        return int(json.load(fh).get("max_repeat", 1)) > 1
+
+
+def _pack_stage(labeled, args):
+    kw = dict(tokenizer=args.pack_tokenizer, bpe_merges=args.bpe_merges)
+    if not _mix_repeats(args):
+        return apply_packing(labeled, args.pack_max_tokens, **kw)
+    # epoch-aware export: one pack slot per (doc, mix copy) in
+    # OUTPUT/pack_manifest; the main table keeps its one-row-per-doc shape
+    # (see build_pack_manifest).  With max_repeat == 1 every copy count is
+    # 1 and the per-row pack columns express the assignment exactly, so
+    # the plain path keeps its schema
+    build_pack_manifest(labeled, args.pack_max_tokens, **kw).write.mode(
+        "overwrite"
+    ).parquet(args.output + "/pack_manifest")
+    return labeled
+
+
+# The stages after the policy stages, in run order, as (enabled(args),
+# apply(labeled, args)): the corpus-relative model stages, then packing.
+MODEL_STAGES = (
+    (
+        lambda a: a.domain_reputation_min_rate is not None,
+        lambda df, a: apply_domain_reputation_filter(
+            df, a.domain_reputation_min_rate, prior_strength=a.domain_reputation_strength
+        ),
+    ),
+    (
+        lambda a: a.quality_classifier_min_prob is not None
+        or a.quality_classifier_keep_frac is not None,
+        lambda df, a: apply_quality_classifier(
+            df,
+            a.quality_classifier_min_prob,
+            calibrate=a.quality_classifier_calibrate,
+            keep_frac=a.quality_classifier_keep_frac,
+        ),
+    ),
+    (
+        lambda a: a.semdedup_threshold is not None,
+        lambda df, a: apply_semdedup(
+            df,
+            a.semdedup_threshold,
+            n_clusters=a.semdedup_clusters,
+            centroid_mode=a.semdedup_centroids,
+        ),
+    ),
+    (lambda a: a.dsir_keep_frac is not None, _dsir_stage),
+    (
+        lambda a: a.mixture_spec is not None,
+        lambda df, a: apply_mixture(df, a.mixture_spec),
+    ),
+    (lambda a: a.pack_max_tokens is not None, _pack_stage),
+)
+
+
+def apply_model_stages(labeled, args):
+    """Run the enabled MODEL_STAGES over ``labeled``.  Factored out of
+    main() so the wiring is testable in-process, like apply_pre_passes.
+
+    MODEL-STAGE BOUNDARIES ARE MATERIALIZED, like the dedup pre-passes:
+    every model stage consumes its input through 2-3 branches (train +
+    score + join-back; domain agg + join-back; embed + scan + join-back;
+    rate table + hash filter), so an uncut chain recomputes the whole
+    upstream cascade once per branch, multiplicatively across stages —
+    chaining five of them blew an 8g driver heap on plan analysis alone
+    before any row moved, and persist does NOT help (CacheManager
+    re-normalizes the full analyzed tree per registration).  With two or
+    more stages on, the input and each stage's output are cut — all but
+    packing's, which only the output write reads; a single stage stays
+    lazy.  The cuts are their own sequence: they never release the last
+    pre-pass cut, which quality_filter_full's persisted labels still
+    read."""
+    on = [apply for enabled, apply in MODEL_STAGES if enabled(args)]
+    cut = _Cuts(args.stage_dir, "model_stage") if len(on) > 1 else (lambda df: df)
+    labeled = cut(labeled)
+    for apply in on:
+        labeled = apply(labeled, args)
+        if apply is not _pack_stage:
+            labeled = cut(labeled)
+    return labeled
+
+
+def build_policy_fn(args):
     """Compose the post-label policy stages (--keep-langs, --max-url-risk,
     --decontaminate, --max-toxicity, --pii-scrub, --scrub-words) into ONE
     ``labeled -> labeled`` function used by BOTH the full-run and
@@ -875,13 +940,10 @@ def build_policy_fn(args, parser=None):
     flag.  All of these are per-row against FIXED external inputs
     (lexicon/benchmark/keyword files), so they satisfy resume's bucket
     idempotency — unlike the corpus-trained LM, which stays excluded.
-    Files are read ONCE here (driver side) so validation fails before
-    any Spark work and reprocessed tail buckets see identical inputs."""
-    err = (parser.error if parser else None) or (lambda m: (_ for _ in ()).throw(SystemExit(m)))
+    Files are read ONCE here (driver side) so reprocessed tail buckets
+    see identical inputs; parse_args has already checked the flags."""
     stages = []
-    zh_seg = getattr(args, "zh_policy_seg", False)
-    if zh_seg and not (args.decontaminate or args.max_toxicity is not None):
-        err("--zh-policy-seg requires --decontaminate and/or --max-toxicity")
+    zh_seg = args.zh_policy_seg
     tox_col = dec_col = "text_clean"
     if zh_seg:
         from pyspark.sql import functions as F
@@ -897,7 +959,7 @@ def build_policy_fn(args, parser=None):
             )
         )
         tox_col = dec_col = "_policy_seg"
-    if getattr(args, "dedup_against", None) is not None:
+    if args.dedup_against is not None:
         # first content-policy stage: the band join trims the kept set
         # before the costlier token-matching stages
         stages.append(
@@ -912,7 +974,7 @@ def build_policy_fn(args, parser=None):
             with open(args.url_risk_keywords) as fh:
                 kws = [ln.strip().lower() for ln in fh if ln.strip()]
         stages.append(lambda df: apply_url_risk_filter(df, args.max_url_risk, kws))
-    if getattr(args, "c4_line_filter", False):
+    if args.c4_line_filter:
         stages.append(
             lambda df: apply_c4_line_filter(
                 df,
@@ -920,7 +982,7 @@ def build_policy_fn(args, parser=None):
                 min_sentences=args.c4_min_sentences,
             )
         )
-    if getattr(args, "fineweb_filter", False):
+    if args.fineweb_filter:
         stages.append(
             lambda df: apply_fineweb_filter(
                 df,
@@ -929,17 +991,13 @@ def build_policy_fn(args, parser=None):
                 dup_ratio=args.fineweb_dup_ratio,
             )
         )
-    if getattr(args, "edu_min_score", None) is not None:
-        import os as _os
-
-        if not _os.path.exists(args.edu_teacher_path):
-            err(f"--edu-teacher-path not found: {args.edu_teacher_path}")
+    if args.edu_min_score is not None:
         stages.append(
             lambda df: apply_edu_filter(
                 df, args.edu_teacher_path, args.edu_min_score
             )
         )
-    if getattr(args, "min_dominant_script_frac", None) is not None:
+    if args.min_dominant_script_frac is not None:
         # cheapest policy stage (pure codegen) — runs before the
         # token-matching stages so their Arrow work skips nothing it
         # shouldn't but the common drop happens first
@@ -962,8 +1020,6 @@ def build_policy_fn(args, parser=None):
             )
         )
     if args.max_toxicity is not None:
-        if not args.toxicity_lexicon:
-            err("--max-toxicity requires --toxicity-lexicon FILE")
         with open(args.toxicity_lexicon) as fh:
             terms = [ln.strip() for ln in fh if ln.strip()]
         stages.append(
@@ -1023,14 +1079,7 @@ def apply_url_risk_filter(labeled, max_risk, keywords=None):
     kws = tuple(keywords) if keywords else URL_RISK_KEYWORDS
     return (
         labeled.withColumn("url_risk", url_risk_score(F.col("url"), kws))
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & (F.col("url_risk") > max_risk),
-                F.lit("url_risk"),
-            ).otherwise(F.col("drop_reason")),
-        )
-        .withColumn("keep", F.col("drop_reason").isNull())
+        .transform(_drop_kept, (F.col("url_risk") > max_risk, "url_risk"))
     )
 
 
@@ -1061,14 +1110,10 @@ def apply_decontamination(labeled, bench_texts, n=13, text_col="text_clean"):
     )
     return (
         labeled.join(bad, "url", "left")
-        .withColumn(
-            "drop_reason",
-            F.when(
-                F.col("keep") & F.coalesce(F.col("_cont"), F.lit(False)),
-                F.lit("contaminated"),
-            ).otherwise(F.col("drop_reason")),
+        .transform(
+            _drop_kept,
+            (F.coalesce(F.col("_cont"), F.lit(False)), "contaminated"),
         )
-        .withColumn("keep", F.col("drop_reason").isNull())
         .drop("_cont")
     )
 
@@ -1082,17 +1127,13 @@ def apply_lang_whitelist(labeled, langs):
     NULL coalesces to not-whitelisted."""
     from pyspark.sql import functions as F
 
-    return labeled.withColumn(
-        "drop_reason",
-        F.when(
-            F.col("keep")
-            & ~F.coalesce(F.col("lang_pred").isin(langs), F.lit(False)),
-            F.lit("lang_filtered"),
-        ).otherwise(F.col("drop_reason")),
-    ).withColumn("keep", F.col("drop_reason").isNull())
+    return _drop_kept(
+        labeled,
+        (~F.coalesce(F.col("lang_pred").isin(langs), F.lit(False)), "lang_filtered"),
+    )
 
 
-def main(argv=None) -> None:
+def build_parser():
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="pages table path (url, warc_ts, html, text, lang)")
     p.add_argument(
@@ -1149,12 +1190,13 @@ def main(argv=None) -> None:
         "--stage-dir",
         default=None,
         metavar="DIR",
-        help="materialize every dedup pre-pass stage as parquet under DIR "
-        "and re-read it (true lineage cut) instead of caching in memory: "
-        "plans stay O(1) per stage, stage tables survive for lineage "
-        "audits, and zero stages are held in executor memory — the "
-        "100 TB-shape default; in-memory persist remains the small-run "
-        "default",
+        help="materialize every lineage cut (each dedup pre-pass stage, "
+        "and each model stage when two or more are on) as parquet under "
+        "DIR and re-read it instead of taking an eager in-memory "
+        "localCheckpoint: plans stay O(1) per stage, stage tables survive "
+        "executor loss and remain for lineage audits, and zero stages are "
+        "held in executor memory — the 100 TB-shape default; the in-memory "
+        "checkpoint remains the small-run default",
     )
     p.add_argument(
         "--fix-mojibake",
@@ -1408,7 +1450,7 @@ def main(argv=None) -> None:
         "classifier rank (largest whole-bin keep rate not exceeding "
         "FRAC over the 64-bin log-odds histogram; deterministic, one "
         "constant-cardinality exchange). The form published recipes "
-        "specify ('keep the best X%'), immune to probability "
+        "specify ('keep the best X%%'), immune to probability "
         "miscalibration. Corpus-relative, so incompatible with --resume.",
     )
     p.add_argument(
@@ -1528,6 +1570,7 @@ def main(argv=None) -> None:
     )
     p.add_argument(
         "--domain-history",
+        type=lambda s: [d.strip() for d in s.split(",") if d.strip()],
         default=None,
         metavar="DIRS",
         help="comma-separated previous run OUTPUT dirs (oldest first): "
@@ -1568,9 +1611,108 @@ def main(argv=None) -> None:
         default=None,
         help="generate N synthetic pages instead of --input (smoke runs)",
     )
+    return p
+
+
+# Corpus-relative stages: each fits a model or a quota to the run's whole
+# corpus, so the tail buckets --resume reprocesses would not come out as
+# they did in the run that first committed them.  flag -> why.
+CORPUS_RELATIVE = {
+    "--with-lm": "the self-trained LM depends on the run's bucket batch "
+    "(a separate LM pass needs an explicit --ppl-threshold)",
+    "--domain-reputation-min-rate": "domain rates depend on the run's full "
+    "label census",
+    "--quality-classifier-min-prob": "the distilled classifier depends on "
+    "the run's full label balance",
+    "--quality-classifier-keep-frac": "the distilled classifier depends on "
+    "the run's full label balance",
+    "--semdedup-threshold": "cluster membership and smaller-url comparisons "
+    "depend on the run's full kept set",
+    "--dsir-keep-frac": "the DSIR raw model depends on the run's full kept set",
+    "--mixture-spec": "per-group keep rates depend on the run's full kept counts",
+    "--pack-max-tokens": "bin composition depends on the run's full kept set",
+}
+
+# flag -> the flags it takes effect with (any one of them); without one it
+# would be silently ignored
+REQUIRES = {
+    "--repetition-rules": ("--with-lm",),
+    "--gopher-full": ("--with-lm",),
+    "--ppl-threshold": ("--with-lm",),
+    "--ppl-threshold-from-snapshot": ("--with-lm",),
+    "--ppl-buckets": ("--with-lm",),
+    "--minhash-sample-mod": ("--minhash-dedup",),
+    "--quality-classifier-calibrate": ("--quality-classifier-min-prob",),
+    "--expire-snapshots": ("--resume",),
+    "--semdedup-clusters": ("--semdedup-threshold",),
+    "--domain-reputation-strength": ("--domain-reputation-min-rate",),
+    "--url-risk-keywords": ("--max-url-risk",),
+    "--dsir-keep-frac": ("--dsir-target-path",),
+    "--dsir-target-path": ("--dsir-keep-frac",),
+    "--edu-min-score": ("--edu-teacher-path",),
+    "--edu-teacher-path": ("--edu-min-score",),
+    "--max-toxicity": ("--toxicity-lexicon",),
+    "--toxicity-lexicon": ("--max-toxicity",),
+    "--fineweb-punct-ratio": ("--fineweb-filter",),
+    "--fineweb-short-ratio": ("--fineweb-filter",),
+    "--fineweb-dup-ratio": ("--fineweb-filter",),
+    "--zh-policy-seg": ("--decontaminate", "--max-toxicity"),
+}
+
+EXCLUSIVE = (
+    ("--ppl-threshold", "--ppl-threshold-from-snapshot", "two sources of one cutoff"),
+    (
+        "--quality-classifier-min-prob",
+        "--quality-classifier-keep-frac",
+        "absolute threshold vs keep budget",
+    ),
+    ("--resume", "--domain-history", "resume-mode runs write no domain_metrics"),
+)
+
+
+def parse_args(argv=None):
+    """The job's arguments, checked: every refusal happens here, before
+    main() starts Spark or reads a row."""
+    p = build_parser()
     args = p.parse_args(argv)
 
-    import os
+    def given(flag):
+        v = getattr(args, flag[2:].replace("-", "_"))
+        return v is not None and v is not False
+
+    if args.resume:
+        for flag, why in CORPUS_RELATIVE.items():
+            if given(flag):
+                p.error(
+                    f"--resume is incompatible with {flag}: {why}, so "
+                    "reprocessed tail buckets would not come out identically "
+                    "(bucket idempotency). Run it as a separate full pass "
+                    "over the resumed output."
+                )
+    for flag, parents in REQUIRES.items():
+        if given(flag) and not any(map(given, parents)):
+            p.error(f"{flag} requires {' or '.join(parents)}")
+    for a, b, why in EXCLUSIVE:
+        if given(a) and given(b):
+            p.error(f"{a} and {b} are mutually exclusive ({why})")
+    if args.edu_teacher_path and not os.path.exists(args.edu_teacher_path):
+        p.error(f"--edu-teacher-path not found: {args.edu_teacher_path}")
+    snap = args.ppl_threshold_from_snapshot
+    if snap and not os.path.exists(os.path.join(snap, "run_stats.json")):
+        p.error(f"--ppl-threshold-from-snapshot: no run_stats.json under {snap}")
+    missing = [
+        d for d in args.domain_history or () if not os.path.isdir(d + "/domain_metrics")
+    ]
+    if missing:
+        p.error(
+            f"--domain-history: no domain_metrics under {missing} "
+            "(resume-mode runs do not write it; pass full-run outputs)"
+        )
+    return args
+
+
+def main(argv=None) -> None:
+    args = parse_args(argv)
 
     from harvesttext_spark.session import get_spark
 
@@ -1622,87 +1764,13 @@ def main(argv=None) -> None:
         fix_mojibake=args.fix_mojibake,
         stage_dir=args.stage_dir,
     )
-    if args.dsir_keep_frac is not None and not args.dsir_target_path:
-        p.error("--dsir-keep-frac requires --dsir-target-path PARQUET")
-    if (
-        args.quality_classifier_min_prob is not None
-        and args.quality_classifier_keep_frac is not None
-    ):
-        p.error(
-            "--quality-classifier-min-prob and --quality-classifier-keep-frac "
-            "are mutually exclusive (absolute threshold vs keep budget)"
-        )
-    if args.edu_min_score is not None and not args.edu_teacher_path:
-        p.error("--edu-min-score requires --edu-teacher-path PARQUET")
     if args.resume:
-        from harvesttext_spark.pipeline.resume import run_with_resume
-
-        if args.pack_max_tokens is not None:
-            sys.exit(
-                "--resume is incompatible with --pack-max-tokens: bin "
-                "composition depends on the run's full kept set, so "
-                "reprocessed tail buckets would repack differently "
-                "(bucket idempotency). Pack as a separate full pass over "
-                "the resumed output."
-            )
-        if args.dsir_keep_frac is not None:
-            sys.exit(
-                "--resume is incompatible with --dsir-keep-frac: the DSIR "
-                "raw model depends on the run's full kept set, so "
-                "reprocessed tail buckets would not select identically "
-                "(bucket idempotency). Run DSIR as a separate full pass "
-                "over the resumed output."
-            )
-        if args.domain_reputation_min_rate is not None:
-            sys.exit(
-                "--resume is incompatible with --domain-reputation-min-rate: "
-                "domain rates depend on the run's full label census, so "
-                "reprocessed tail buckets would not drop identically "
-                "(bucket idempotency). Run the reputation filter as a "
-                "separate full pass over the resumed output."
-            )
-        if args.semdedup_threshold is not None:
-            sys.exit(
-                "--resume is incompatible with --semdedup-threshold: "
-                "cluster membership and smaller-url comparisons depend on "
-                "the run's full kept set, so reprocessed tail buckets "
-                "would not drop identically (bucket idempotency). Run "
-                "semantic dedup as a separate full pass over the resumed "
-                "output."
-            )
-        if args.mixture_spec is not None:
-            sys.exit(
-                "--resume is incompatible with --mixture-spec: per-group "
-                "keep rates depend on the run's full kept counts, so "
-                "reprocessed tail buckets would not sample identically "
-                "(bucket idempotency). Run mixture sampling as a separate "
-                "full pass over the resumed output."
-            )
-        if (
-            args.quality_classifier_min_prob is not None
-            or args.quality_classifier_keep_frac is not None
-        ):
-            sys.exit(
-                "--resume is incompatible with --quality-classifier-min-prob/"
-                "--quality-classifier-keep-frac: the distilled classifier "
-                "depends on the run's full label balance, so reprocessed "
-                "tail buckets would not score identically (bucket "
-                "idempotency). Run the classifier as a separate full pass "
-                "over the resumed output."
-            )
-        if args.with_lm:
-            sys.exit(
-                "--resume is incompatible with --with-lm: the self-trained "
-                "LM depends on the run's bucket batch, so reprocessed tail "
-                "buckets would not label identically (bucket idempotency). "
-                "Run the LM stage as a separate full pass over the resumed "
-                "output with an explicit --ppl-threshold."
-            )
         from harvesttext_spark.pipeline.quality_filter import quality_filter
+        from harvesttext_spark.pipeline.resume import run_with_resume
 
         # the policy stages are per-row vs fixed external files, so they
         # compose with bucket-idempotent resume (build_policy_fn docstring)
-        policy_fn = build_policy_fn(args, p)
+        policy_fn = build_policy_fn(args)
         filter_fn = lambda df: policy_fn(  # noqa: E731
             quality_filter(df, fast_path=args.fast_path)
         )
@@ -1729,11 +1797,6 @@ def main(argv=None) -> None:
         ppl_threshold = args.ppl_threshold
         if args.with_lm:
             if args.ppl_threshold_from_snapshot is not None:
-                if ppl_threshold is not None:
-                    raise SystemExit(
-                        "--ppl-threshold and --ppl-threshold-from-snapshot "
-                        "are mutually exclusive"
-                    )
                 stats_path = os.path.join(
                     args.ppl_threshold_from_snapshot, "run_stats.json"
                 )
@@ -1756,133 +1819,10 @@ def main(argv=None) -> None:
         else:
             labeled = quality_filter(pages, fast_path=args.fast_path)
         if args.ppl_buckets:
-            if not args.with_lm:
-                p.error("--ppl-buckets requires --with-lm (the ppl column)")
             from harvesttext_spark.operators.lm_perplexity import ppl_buckets
 
             labeled = ppl_buckets(labeled, group_col="lang_pred")
-        labeled = build_policy_fn(args, p)(labeled)
-        # MODEL-STAGE BOUNDARIES ARE MATERIALIZED, like the dedup
-        # pre-passes: every model stage consumes `labeled` through 2-3
-        # branches (train + score + join-back; domain agg + join-back;
-        # embed + scan + join-back; rate table + hash filter), so an
-        # unmaterialized chain recomputes the whole upstream cascade
-        # once per branch, multiplicatively across stages — chaining
-        # five of them blew an 8g driver heap on plan analysis alone
-        # before any row moved, and persist does NOT help (CacheManager
-        # re-normalizes the full analyzed tree per registration — the
-        # measured OOM).  The cut must truncate LINEAGE: --stage-dir
-        # writes parquet (the 100 TB default — durable, auditable);
-        # otherwise eager localCheckpoint() stores blocks on executors
-        # and replaces the plan with a leaf (fine single-node /
-        # fault-free; on a lossy cluster pass --stage-dir).
-        _ms_n = [0]
-        model_stages_on = sum(
-            x is not None
-            for x in (
-                args.domain_reputation_min_rate,
-                args.quality_classifier_min_prob
-                if args.quality_classifier_min_prob is not None
-                else args.quality_classifier_keep_frac,
-                args.semdedup_threshold,
-                args.dsir_keep_frac,
-                args.mixture_spec,
-                args.pack_max_tokens,
-            )
-        )
-
-        def _model_stage(df):
-            if model_stages_on < 2:
-                return df  # single branching stage: lazy is fine
-            t0 = time.time()
-            if args.stage_dir is not None:
-                path = f"{args.stage_dir}/model_stage_{_ms_n[0]:02d}"
-                _ms_n[0] += 1
-                df.write.mode("overwrite").parquet(path)
-                out = spark.read.parquet(path)
-            else:
-                out = df.localCheckpoint(eager=True)
-            # stage wall time to stderr: the cut materializes the whole
-            # stage, so this IS the stage's cost (BENCH.md breakdown)
-            print(
-                f"# model_stage_{_ms_n[0] - 1 if args.stage_dir else '?'}"
-                f": {time.time() - t0:.1f}s",
-                file=sys.stderr,
-                flush=True,
-            )
-            return out
-
-        if model_stages_on >= 2:
-            labeled = _model_stage(labeled)  # flat input for the first
-        if args.domain_reputation_min_rate is not None:
-            labeled = _model_stage(
-                apply_domain_reputation_filter(
-                    labeled,
-                    args.domain_reputation_min_rate,
-                    prior_strength=args.domain_reputation_strength,
-                )
-            )
-        if (
-            args.quality_classifier_min_prob is not None
-            or args.quality_classifier_keep_frac is not None
-        ):
-            labeled = _model_stage(
-                apply_quality_classifier(
-                    labeled,
-                    args.quality_classifier_min_prob,
-                    calibrate=args.quality_classifier_calibrate,
-                    keep_frac=args.quality_classifier_keep_frac,
-                )
-            )
-        if args.semdedup_threshold is not None:
-            labeled = _model_stage(
-                apply_semdedup(
-                    labeled,
-                    args.semdedup_threshold,
-                    n_clusters=args.semdedup_clusters,
-                    centroid_mode=args.semdedup_centroids,
-                )
-            )
-        if args.dsir_keep_frac is not None:
-            from pyspark.sql import functions as F
-
-            target = spark.read.parquet(args.dsir_target_path)
-            tcol = "text_clean" if "text_clean" in target.columns else "text"
-            target = target.select(F.col(tcol).alias("text_clean"))
-            labeled = _model_stage(
-                apply_dsir_select(labeled, target, args.dsir_keep_frac)
-            )
-        if args.mixture_spec is not None:
-            labeled = _model_stage(apply_mixture(labeled, args.mixture_spec))
-        pack_manifest_rows = None
-        if args.pack_max_tokens is not None:
-            mix_repeats = False
-            if args.mixture_spec is not None:
-                with open(args.mixture_spec, encoding="utf-8") as fh:
-                    mix_repeats = int(json.load(fh).get("max_repeat", 1)) > 1
-            if mix_repeats:
-                # epoch-aware export: one pack slot per (doc, mix copy)
-                # in OUTPUT/pack_manifest; the main table keeps its
-                # one-row-per-doc shape (see build_pack_manifest).  With
-                # max_repeat == 1 every copy count is 1 and the per-row
-                # pack columns express the assignment exactly, so the
-                # plain path keeps its schema
-                build_pack_manifest(
-                    labeled,
-                    args.pack_max_tokens,
-                    tokenizer=args.pack_tokenizer,
-                    bpe_merges=args.bpe_merges,
-                ).write.mode("overwrite").parquet(args.output + "/pack_manifest")
-                pack_manifest_rows = spark.read.parquet(
-                    args.output + "/pack_manifest"
-                ).count()
-            else:
-                labeled = apply_packing(
-                    labeled,
-                    args.pack_max_tokens,
-                    tokenizer=args.pack_tokenizer,
-                    bpe_merges=args.bpe_merges,
-                )
+        labeled = apply_model_stages(build_policy_fn(args)(labeled), args)
         labeled.write.mode("overwrite").parquet(args.output + "/data")
         out = spark.read.parquet(args.output + "/data")
         # with the LM stage on, the domain table carries the model rollups
@@ -1916,8 +1856,10 @@ def main(argv=None) -> None:
             "n_keep": k,
             "drops_by_reason": dict(sorted(census.items())),
         }
-        if pack_manifest_rows is not None:
-            summary["pack_manifest_rows"] = pack_manifest_rows
+        if args.pack_max_tokens is not None and _mix_repeats(args):
+            summary["pack_manifest_rows"] = spark.read.parquet(
+                args.output + "/pack_manifest"
+            ).count()
     if args.export_dedup_index:
         # both branches land the labeled table at OUTPUT/data; the index
         # covers KEPT pages only (dropped pages can't collide away a
@@ -1943,19 +1885,8 @@ def main(argv=None) -> None:
             domain_timeseries,
         )
 
-        prev_dirs = [d.strip() for d in args.domain_history.split(",") if d.strip()]
-        missing = [
-            d
-            for d in prev_dirs + [args.output]
-            if not os.path.isdir(d + "/domain_metrics")
-        ]
-        if missing:
-            sys.exit(
-                f"--domain-history: no domain_metrics under {missing} "
-                "(resume-mode runs do not write it; pass full-run outputs)"
-            )
         stacked = None
-        for i, d in enumerate(prev_dirs + [args.output]):
+        for i, d in enumerate(args.domain_history + [args.output]):
             dm_i = spark.read.parquet(d + "/domain_metrics").select(
                 "domain",
                 F.lit(i).alias("snapshot"),
@@ -1966,7 +1897,7 @@ def main(argv=None) -> None:
         domain_timeseries(stacked).write.mode("overwrite").parquet(
             args.output + "/domain_timeseries"
         )
-        summary["domain_timeseries_snapshots"] = len(prev_dirs) + 1
+        summary["domain_timeseries_snapshots"] = len(args.domain_history) + 1
     if args.bpe_vocab_out:
         from pyspark.sql import functions as F
 

@@ -181,18 +181,18 @@ def test_edu_job_stage(spark, tmp_path):
     assert all("edu_score" in r for r in got.values())
 
 
-def test_edu_stage_composes_with_resume_flagset(spark):
+def test_edu_stage_composes_with_resume_flagset(tmp_path):
     """--edu-min-score must be accepted alongside --resume by the
     argument validation (fixed external model -> bucket-idempotent):
-    the refusal list in main() names every corpus-relative stage and
-    edu is not one of them."""
-    import inspect
+    the corpus-relative table parse_args refuses under --resume does not
+    list it."""
+    from jobs.run_quality_filter import CORPUS_RELATIVE, parse_args
 
-    import jobs.run_quality_filter as job
-
-    src = inspect.getsource(job.main)
-    refusals = [
-        seg for seg in src.split("sys.exit(")[1:] if "--resume" in seg[:400]
-    ]
-    assert refusals, "resume refusal block missing"
-    assert not any("edu-min-score" in seg[:400] for seg in refusals)
+    teacher = tmp_path / "teacher"
+    teacher.mkdir()
+    args = parse_args(
+        ["--output", str(tmp_path / "out"), "--resume",
+         "--edu-min-score", "3", "--edu-teacher-path", str(teacher)]
+    )
+    assert args.resume and args.edu_min_score == 3
+    assert "--edu-min-score" not in CORPUS_RELATIVE

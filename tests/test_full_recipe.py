@@ -11,8 +11,8 @@ import subprocess
 import sys
 
 
-def test_full_recipe_one_invocation(spark, tmp_path):
-    out = str(tmp_path / "out")
+def recipe_argv(tmp_path):
+    """The recipe's job arguments (writes the mixture spec they name)."""
     mix = tmp_path / "mix.json"
     mix.write_text(
         json.dumps(
@@ -22,40 +22,44 @@ def test_full_recipe_one_invocation(spark, tmp_path):
             }
         )
     )
+    return [
+        "--synthesize", "2000",
+        "--output", str(tmp_path / "out"),
+        # parquet lineage cuts between ALL stages: with 5 pre-passes
+        # + battery + 5 model stages chained, persist-shape caching
+        # OOMs the driver on CacheManager plan normalization alone —
+        # the documented 100 TB-shape default is --stage-dir
+        "--stage-dir", str(tmp_path / "stages"),
+        # dedup pre-passes
+        "--url-dedup", "--exact-dedup",
+        "--drop-boilerplate", "3",
+        "--dedup-paragraphs",
+        "--minhash-dedup", "0.8",
+        # per-row batteries (c4/fineweb are OMITTED here: the
+        # synthetic word-soup pages carry no sentence punctuation,
+        # so those line rules correctly drop 100% of the corpus and
+        # nothing would remain to train the model stages — their
+        # composition is pinned by their own stage tests on
+        # punctuated fixtures)
+        "--min-dominant-script-frac", "0.3",
+        # corpus-relative model stages
+        "--domain-reputation-min-rate", "0.05",
+        "--quality-classifier-min-prob", "0.01",
+        "--semdedup-threshold", "0.98",
+        # mixing + export
+        "--mixture-spec", str(mix),
+        "--pack-max-tokens", "512",
+        "--export-dedup-index",
+        "--bpe-vocab-out", str(tmp_path / "merges.txt"), "--bpe-merges", "60",
+    ]
+
+
+def test_full_recipe_one_invocation(spark, tmp_path):
+    out = str(tmp_path / "out")
     vocab = str(tmp_path / "merges.txt")
     env = {**os.environ, "SPARK_GRAFT_CPUS": "16", "PYTHONPATH": os.getcwd()}
     r = subprocess.run(
-        [
-            sys.executable, "jobs/run_quality_filter.py",
-            "--synthesize", "2000",
-            "--output", out,
-            # parquet lineage cuts between ALL stages: with 5 pre-passes
-            # + battery + 5 model stages chained, persist-shape caching
-            # OOMs the driver on CacheManager plan normalization alone —
-            # the documented 100 TB-shape default is --stage-dir
-            "--stage-dir", str(tmp_path / "stages"),
-            # dedup pre-passes
-            "--url-dedup", "--exact-dedup",
-            "--drop-boilerplate", "3",
-            "--dedup-paragraphs",
-            "--minhash-dedup", "0.8",
-            # per-row batteries (c4/fineweb are OMITTED here: the
-            # synthetic word-soup pages carry no sentence punctuation,
-            # so those line rules correctly drop 100% of the corpus and
-            # nothing would remain to train the model stages — their
-            # composition is pinned by their own stage tests on
-            # punctuated fixtures)
-            "--min-dominant-script-frac", "0.3",
-            # corpus-relative model stages
-            "--domain-reputation-min-rate", "0.05",
-            "--quality-classifier-min-prob", "0.01",
-            "--semdedup-threshold", "0.98",
-            # mixing + export
-            "--mixture-spec", str(mix),
-            "--pack-max-tokens", "512",
-            "--export-dedup-index",
-            "--bpe-vocab-out", vocab, "--bpe-merges", "60",
-        ],
+        [sys.executable, "jobs/run_quality_filter.py", *recipe_argv(tmp_path)],
         capture_output=True, text=True, timeout=900, env=env,
     )
     assert r.returncode == 0, r.stderr[-3000:]

@@ -982,19 +982,13 @@ def test_zh_policy_seg_makes_zh_stages_fire(spark, tmp_path):
     same fixture must flip from untouched to dropped, and the scratch
     column must not leak into the output schema."""
     import datetime as dt
-    from types import SimpleNamespace
 
-    from jobs.run_quality_filter import build_policy_fn
+    import pytest
 
-    def mk_args(**kw):
-        base = dict(
-            keep_langs=None, max_url_risk=None, url_risk_keywords=None,
-            decontaminate=None, decontaminate_ngram=13,
-            max_toxicity=None, toxicity_lexicon=None,
-            pii_scrub=False, scrub_words=None, zh_policy_seg=False,
-        )
-        base.update(kw)
-        return SimpleNamespace(**base)
+    from jobs.run_quality_filter import build_policy_fn, parse_args
+
+    def args(*argv):
+        return parse_args(["--output", str(tmp_path / "out"), *argv])
 
     lex = tmp_path / "tox_zh.txt"
     lex.write_text("暴力\n")
@@ -1012,19 +1006,16 @@ def test_zh_policy_seg_makes_zh_stages_fire(spark, tmp_path):
     )
 
     # whitespace path: zh text is one token -> nothing fires
-    plain = build_policy_fn(
-        mk_args(max_toxicity=0.0, toxicity_lexicon=str(lex),
-                decontaminate=str(bench), decontaminate_ngram=2)
-    )(labeled)
+    token_stages = (
+        "--max-toxicity", "0.0", "--toxicity-lexicon", str(lex),
+        "--decontaminate", str(bench), "--decontaminate-ngram", "2",
+    )
+    plain = build_policy_fn(args(*token_stages))(labeled)
     assert {r["drop_reason"] for r in plain.collect()} == {None}
     assert plain.filter("toxicity > 0").count() == 0
 
     # composed path: segmentation first -> both stages fire
-    seg = build_policy_fn(
-        mk_args(max_toxicity=0.0, toxicity_lexicon=str(lex),
-                decontaminate=str(bench), decontaminate_ngram=2,
-                zh_policy_seg=True)
-    )(labeled)
+    seg = build_policy_fn(args(*token_stages, "--zh-policy-seg"))(labeled)
     got = {r["url"]: r["drop_reason"] for r in seg.collect()}
     assert got["https://zh.example/leak"] == "contaminated"
     assert got["https://zh.example/tox"] == "toxicity"
@@ -1035,10 +1026,8 @@ def test_zh_policy_seg_makes_zh_stages_fire(spark, tmp_path):
     assert abs(tox["https://zh.example/tox"] - 0.2) < 1e-9
 
     # flag without either token stage must refuse
-    import pytest
-
     with pytest.raises(SystemExit):
-        build_policy_fn(mk_args(zh_policy_seg=True))
+        args("--zh-policy-seg")
 
 
 def test_fix_mojibake_stage(spark):
@@ -1122,6 +1111,41 @@ def test_in_memory_pre_passes_cut_lineage(spark):
     plan = out._jdf.queryExecution().logical()
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     assert out.count() > 0
+
+
+def test_in_memory_model_stages_cut_lineage(spark, tmp_path, capsys):
+    """Two model stages without --stage-dir: apply_model_stages cuts the
+    input and each stage, so the result's plan is a leaf; each cut
+    releases the one before it, so the session holds one stage table
+    however many stages ran; and each cut prints a numbered stderr line
+    (the in-memory path once printed "# model_stage_?" for all of them)."""
+    import json
+
+    from harvesttext_spark.pipeline import synthesize_pages
+    from harvesttext_spark.pipeline.quality_filter import quality_filter
+    from jobs.run_quality_filter import apply_model_stages, parse_args
+
+    spec = tmp_path / "mix.json"
+    spec.write_text(json.dumps({"fractions": {"en": 0.5, "zh": 0.5}}))
+    labeled = quality_filter(synthesize_pages(spark, n=200, seed=17))
+    labeled.count()  # materialize upstream caches before counting persists
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    args = parse_args(
+        ["--output", str(tmp_path / "out"), "--domain-reputation-min-rate",
+         "0.05", "--mixture-spec", str(spec)]
+    )
+    out = apply_model_stages(labeled, args)
+    plan = out._jdf.queryExecution().logical()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert out.filter("keep").count() > 0
+    cuts = [
+        ln.split(":")[0] for ln in capsys.readouterr().err.splitlines()
+        if ln.startswith("# model_stage")
+    ]
+    assert cuts == ["# model_stage_00", "# model_stage_01", "# model_stage_02"]
+    plan.rdd().unpersist(False)
 
 
 def test_hash_split_deterministic_and_leakage_safe(spark):
