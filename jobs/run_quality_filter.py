@@ -1659,6 +1659,7 @@ REQUIRES = {
     "--zh-policy-seg": ("--decontaminate", "--max-toxicity"),
 }
 
+# pairs that cannot be combined -> why
 EXCLUSIVE = (
     ("--ppl-threshold", "--ppl-threshold-from-snapshot", "two sources of one cutoff"),
     (

@@ -293,7 +293,10 @@ def test_pack_manifest_job_composition(spark, tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     # two model stages on, no --stage-dir: the input and the mixture
     # stage are cut in memory, each with its own numbered timing line
-    cuts = [ln.split(":")[0] for ln in proc.stderr.splitlines() if ln.startswith("# model_stage")]
+    cuts = [
+        ln.split(":")[0] for ln in proc.stderr.splitlines()
+        if ln.startswith("# model_stage")
+    ]
     assert cuts == ["# model_stage_00", "# model_stage_01"]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     man = spark.read.parquet(str(out_dir / "pack_manifest"))
