@@ -838,7 +838,7 @@ def drop_boilerplate_lines(
 
     ``id_col`` MUST be unique per row: the reassembly groupBy merges
     lines sharing an id into one text (dedup urls first — see
-    jobs/run_quality_filter.py, which guarantees this)."""
+    pipeline/stages.py apply_pre_passes, which guarantees this)."""
     hot = line_doc_freq(docs, text_col, id_col).filter(F.col("df") >= min_df)
     lines = docs.select(
         F.col(id_col).alias("id"),

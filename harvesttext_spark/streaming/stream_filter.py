@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvesttext_spark.pipeline.pages import PAGES_SCHEMA
-from harvesttext_spark.pipeline.quality_filter import label, scrub
+from harvesttext_spark.pipeline.quality_filter import extract_text, label, scrub
 
 
 def streaming_quality_filter(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -25,7 +25,7 @@ def streaming_quality_filter(spark: SparkSession, input_dir: str) -> DataFrame:
     pages = (
         spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
     )
-    out = label(scrub(pages.withColumn("raw_text", F.coalesce("text", F.decode("html", "UTF-8")))))
+    out = label(scrub(extract_text(pages)))
     return out.select("url", "lang_pred", "text_clean", "keep", "drop_reason")
 
 
@@ -137,7 +137,7 @@ def streaming_enrich_domains(
     keep = enriched.filter(
         F.coalesce(F.col("reputation"), F.lit("ok")) != "deny"
     )
-    out = label(scrub(keep.withColumn("raw_text", F.coalesce("text", F.decode("html", "UTF-8")))))
+    out = label(scrub(extract_text(keep)))
     return out.select("url", "domain", "reputation", "keep", "drop_reason")
 
 

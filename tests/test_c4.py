@@ -68,7 +68,7 @@ def test_c4_job_stage(spark):
     """--c4-line-filter wiring: kept pages get line-filtered text_clean;
     brace/lorem/short pages drop with their reasons; already-dropped
     rows keep reason AND original text (audit)."""
-    from jobs.run_quality_filter import apply_c4_line_filter
+    from harvesttext_spark.pipeline.stages import apply_c4_line_filter
 
     rows = [
         ("u1", "Good first sentence with enough words.\nbad line\n"

@@ -103,7 +103,7 @@ def test_determinism_across_partitionings(spark):
 def test_cross_snapshot_job_stage(spark, tmp_path):
     """--dedup-against wiring: kept pages matching the prior index drop
     as cross_snapshot_dup; already-dropped rows keep their reason."""
-    from jobs.run_quality_filter import apply_cross_snapshot_dedup
+    from harvesttext_spark.pipeline.stages import apply_cross_snapshot_dedup
 
     prior = spark.createDataFrame(
         [(f"https://old.example/{i}", _doc(i)) for i in range(10)],

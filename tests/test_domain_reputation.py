@@ -83,7 +83,7 @@ def test_domain_reputation_job_stage(spark):
     """--domain-reputation-min-rate wiring: the spam domain's two
     individually-kept pages drop as domain_reputation; the good domain's
     pages keep; already-dropped rows keep their reason."""
-    from jobs.run_quality_filter import apply_domain_reputation_filter
+    from harvesttext_spark.pipeline.stages import apply_domain_reputation_filter
 
     rows = (
         [(f"https://spam.example/p{i}", True, None) for i in range(2)]

@@ -151,7 +151,7 @@ def test_edu_job_stage(spark, tmp_path):
     teacher parquet drops kept pages graded below the threshold;
     already-dropped rows keep their reason; edu_score lands on every
     row; blank pages score the mean (kept here since mean >= 3)."""
-    from jobs.run_quality_filter import apply_edu_filter
+    from harvesttext_spark.pipeline.stages import apply_edu_filter
 
     hi = "photosynthesis theorem lemma proof corollary axiom derivation"
     lo = "jackpot lottery casino winner prize bonus spins"

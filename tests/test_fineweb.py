@@ -95,7 +95,7 @@ def test_fineweb_job_stage(spark):
     """--fineweb-filter wiring: first failing rule names the drop reason
     (punct -> short -> dup order); already-dropped rows are untouched;
     ratios land as stage-metric columns."""
-    from jobs.run_quality_filter import apply_fineweb_filter
+    from harvesttext_spark.pipeline.stages import apply_fineweb_filter
 
     dup = "This exact navigation line repeats twice in the page."
     rows = [

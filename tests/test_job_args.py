@@ -4,7 +4,8 @@ session or reads a row, so none of these tests builds one."""
 
 import pytest
 
-from jobs.run_quality_filter import CORPUS_RELATIVE, main, parse_args
+from harvesttext_spark.pipeline.stages import MODEL_STAGES, POLICY_STAGES, PRE_PASSES, STAGES
+from jobs.run_quality_filter import CORPUS_RELATIVE, build_parser, main, parse_args
 
 
 def refusal(capsys, argv):
@@ -121,14 +122,53 @@ def test_benchmark_and_recipe_flags_parse(tmp_path):
     assert args.pack_max_tokens == 512 and args.stage_dir is not None
 
 
-def test_main_refuses_before_spark(capsys, monkeypatch):
+@pytest.fixture
+def no_spark(monkeypatch):
     import harvesttext_spark.session as session
 
-    def no_spark(*a, **k):
+    def fail(*a, **k):
         raise AssertionError("Spark started before the arguments were checked")
 
-    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(session, "get_spark", fail)
+
+
+def test_main_refuses_before_spark(capsys, no_spark):
     with pytest.raises(SystemExit) as exc:
         main(["--output", "out", "--resume", "--with-lm"])
     assert exc.value.code == 2
     assert "--resume is incompatible with --with-lm" in capsys.readouterr().err
+
+
+def test_main_refuses_missing_input_before_spark(capsys, no_spark):
+    # parse_args accepts it (in-process callers parse policy flags only);
+    # main() needs pages to read
+    parse_args(["--output", "out"])
+    with pytest.raises(SystemExit) as exc:
+        main(["--output", "out", "--keep-langs", "en"])
+    assert exc.value.code == 2
+    assert "--input or --synthesize is required" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("flag", ["--keep-langs", "--block-domains", "--decontaminate"])
+def test_empty_stage_value_refused(capsys, flag):
+    """An empty value would turn its stage on to do nothing (--keep-langs ''
+    and --block-domains '' were no-ops), so it is refused, not run."""
+    assert f"{flag} needs a non-empty value" in refusal(capsys, [flag, ""])
+
+
+def test_stage_tables():
+    """The stage tables and the parser agree: names are unique, every
+    stage flag is an option, and the resume refusals are exactly the
+    corpus-relative stages' flags plus --with-lm (an LM pass, not a
+    stage)."""
+    assert STAGES == PRE_PASSES + POLICY_STAGES + MODEL_STAGES
+    names = [st.name for st in STAGES]
+    assert len(names) == len(set(names))
+    options = set(build_parser()._option_string_actions)
+    assert {f for st in STAGES for f in st.flags} <= options
+    relative = {f for st in STAGES if st.corpus_relative for f in st.flags}
+    assert set(CORPUS_RELATIVE) == relative | {"--with-lm"}
+    assert "--with-lm" not in relative
+    # only model stages are corpus-relative: the pre-passes run before
+    # --resume's buckets and the policy stages inside them, per row
+    assert not any(st.corpus_relative for st in PRE_PASSES + POLICY_STAGES)

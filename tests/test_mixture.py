@@ -133,7 +133,7 @@ def test_mixture_job_stage(spark, tmp_path):
     as drop_reason=mixture; already-dropped rows keep their reason."""
     import json
 
-    from jobs.run_quality_filter import apply_mixture
+    from harvesttext_spark.pipeline.stages import apply_mixture
 
     spec_path = tmp_path / "mix.json"
     spec_path.write_text(
@@ -147,7 +147,7 @@ def test_mixture_job_stage(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "url string, lang_pred string, keep boolean, drop_reason string"
     )
-    out = apply_mixture(df, str(spec_path)).cache()
+    out = apply_mixture(df, json.loads(spec_path.read_text())).cache()
     got = {r["url"]: r.asDict() for r in out.collect()}
     assert got["https://dead.x/"]["drop_reason"] == "too_short"
     kept = [r for r in got.values() if r["keep"]]

@@ -3,12 +3,15 @@ reference, partitioning/batch-size invariance, capacity invariants, and
 edge modes."""
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from harvesttext_spark.operators.packing import _ffd_pack, pack_sequences, pack_stats
 
+# the checkout these tests belong to: the job subprocess runs its code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAX_TOKENS = 10
 N_SHARDS = 4
 
@@ -158,7 +161,7 @@ def test_pack_tokenizer_bpe_counts_subwords(spark):
     subword measure."""
     from pyspark.sql import functions as F
 
-    from jobs.run_quality_filter import apply_packing
+    from harvesttext_spark.pipeline.stages import apply_packing
 
     rows = [
         (f"https://p{i}.x/", "internationalization antidisestablishment "
@@ -287,8 +290,8 @@ def test_pack_manifest_job_composition(spark, tmp_path):
             "--mixture-spec", str(spec),
             "--pack-max-tokens", "64",
         ],
-        capture_output=True, text=True, cwd="/root/repo",
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo"},
+        capture_output=True, text=True, cwd=ROOT,
+        env={**os.environ, "PYTHONPATH": ROOT},
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     # two model stages on, no --stage-dir: the input and the mixture

@@ -164,7 +164,7 @@ def test_quality_classifier_job_stage(spark):
     """--quality-classifier-min-prob wiring: the distilled model drops
     kept pages that look like the dropped population; already-dropped
     rows keep their reason; quality_prob lands on every row."""
-    from jobs.run_quality_filter import apply_quality_classifier
+    from harvesttext_spark.pipeline.stages import apply_quality_classifier
 
     kept_text = "a well formed english sentence with common words here"
     drop_text = "el gato la mesa los perros de que y en un"
@@ -381,7 +381,7 @@ def test_quality_classifier_job_stage_calibrated(spark):
     the threshold applies to the calibrated column, and with cascade
     labels the calibrated probability of kept-looking pages is high
     (near the observed keep rate) rather than the raw NB extreme."""
-    from jobs.run_quality_filter import apply_quality_classifier
+    from harvesttext_spark.pipeline.stages import apply_quality_classifier
 
     good = "a thoughtful essay about spark engines and careful data work number"
     bad = "buy cheap buy cheap buy cheap casino bonus click now win big"
@@ -455,7 +455,7 @@ def test_quality_classifier_job_stage_keep_frac(spark):
     """--quality-classifier-keep-frac wiring: exactly the budgeted
     top fraction of KEPT pages survives (whole-bin granularity), the
     drop reason is quality_classifier, and dropped rows keep theirs."""
-    from jobs.run_quality_filter import apply_quality_classifier
+    from harvesttext_spark.pipeline.stages import apply_quality_classifier
 
     good = "a thoughtful essay about spark engines and careful data work number"
     bad = "buy cheap buy cheap buy cheap casino bonus click now win big"

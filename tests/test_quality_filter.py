@@ -11,9 +11,22 @@ from harvesttext_spark.pipeline.quality_filter import (
     partition_lineage,
     quality_filter,
 )
+from jobs.run_quality_filter import parse_args
 from tests.reference_impl import label_py
 
 N_PAGES = 1500
+
+# every dedup pre-pass flag, as the job's full recipe passes them
+ALL_PRE_PASSES = (
+    "--fix-mojibake", "--url-dedup", "--drop-boilerplate", "3",
+    "--dedup-paragraphs", "--cut-dup-spans", "8", "--exact-dedup",
+    "--minhash-dedup", "0.8",
+)
+
+
+def job_args(*argv):
+    """The job's checked arguments for ``argv`` (no Spark)."""
+    return parse_args(["--output", "unused", *argv])
 
 
 @pytest.fixture(scope="module")
@@ -300,7 +313,7 @@ def test_job_boilerplate_pre_pass_with_dup_urls(spark):
     the wiring dedups exact urls first (latest crawl survives)."""
     import datetime as dt
 
-    from jobs.run_quality_filter import apply_pre_passes
+    from harvesttext_spark.pipeline.stages import apply_pre_passes
 
     boiler = "accept all cookies"
     rows = [
@@ -317,7 +330,7 @@ def test_job_boilerplate_pre_pass_with_dup_urls(spark):
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
     out = {
         r["url"]: r["text"]
-        for r in apply_pre_passes(df, url_dedup=False, boilerplate_min_df=3).collect()
+        for r in apply_pre_passes(df, job_args("--drop-boilerplate", "3")).collect()
     }
     # one row per url, boilerplate line gone, NO cross-row interleaving,
     # and the url-dup survivor is the latest crawl
@@ -418,7 +431,7 @@ def test_job_text_dedup_pre_passes(spark):
     never group them into one digest."""
     import datetime as dt
 
-    from jobs.run_quality_filter import apply_pre_passes
+    from harvesttext_spark.pipeline.stages import apply_pre_passes
 
     base = ("the quick brown fox jumps over the lazy dog and then "
             "runs far away across the wide green field tonight")
@@ -435,7 +448,7 @@ def test_job_text_dedup_pre_passes(spark):
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
     exact = {
         r["url"]
-        for r in apply_pre_passes(df, exact_dedup=True).collect()
+        for r in apply_pre_passes(df, job_args("--exact-dedup")).collect()
     }
     assert exact == {
         "https://a.example/1",   # min-url survivor of the exact pair
@@ -447,7 +460,7 @@ def test_job_text_dedup_pre_passes(spark):
     both = {
         r["url"]
         for r in apply_pre_passes(
-            df, exact_dedup=True, minhash_jaccard=0.5
+            df, job_args("--exact-dedup", "--minhash-dedup", "0.5")
         ).collect()
     }
     assert both == {
@@ -550,7 +563,7 @@ def test_lang_whitelist_null_pred_filtered(spark):
     """--keep-langs must be NULL-safe: a kept doc with lang_pred=NULL is
     outside the whitelist (a bare `keep & ~isin` evaluates NULL and let
     such docs silently bypass the filter)."""
-    from jobs.run_quality_filter import apply_lang_whitelist
+    from harvesttext_spark.pipeline.stages import apply_lang_whitelist
 
     rows = [
         ("u1", "zh", True, None),
@@ -577,7 +590,7 @@ def test_toxicity_filter_stage(spark):
     """--max-toxicity wiring: kept docs above the density threshold become
     drop_reason=toxicity; already-dropped docs keep their reason; the
     density lands in a toxicity metric column; NULL density passes."""
-    from jobs.run_quality_filter import apply_toxicity_filter
+    from harvesttext_spark.pipeline.stages import apply_toxicity_filter
 
     rows = [
         ("u1", "vile vile vile awful text here", True, None),
@@ -646,7 +659,7 @@ def test_dsir_select_stage(spark):
     survive the resample while off-distribution kept docs become
     drop_reason=dsir; already-dropped docs keep their reason and never
     enter the raw model; dsir_logw lands as a metric column."""
-    from jobs.run_quality_filter import apply_dsir_select
+    from harvesttext_spark.pipeline.stages import apply_dsir_select
 
     rows = [
         ("u1", "quality data makes quality models", True, None),
@@ -680,7 +693,7 @@ def test_packing_stage(spark):
     """--pack-max-tokens wiring: kept docs get (pack_shard, pack_bin)
     sequence ids under the token budget; dropped docs get NULL pack
     columns and never occupy bin capacity."""
-    from jobs.run_quality_filter import apply_packing
+    from harvesttext_spark.pipeline.stages import apply_packing
 
     rows = [
         ("u1", "a b c d", True, None),
@@ -710,7 +723,7 @@ def test_script_mix_filter_stage(spark):
     """--min-dominant-script-frac wiring: kept mixed-script docs drop as
     script_mix; already-dropped docs keep their reason; metric columns
     land; NULL text reports 'none'/0.0 (dropped upstream anyway)."""
-    from jobs.run_quality_filter import apply_script_mix_filter
+    from harvesttext_spark.pipeline.stages import apply_script_mix_filter
 
     rows = [
         ("u1", "a中b文c字d符e符 Ω дa 1ب!", True, None),  # no script dominates
@@ -738,7 +751,7 @@ def test_decontamination_stage(spark):
     """--decontaminate wiring: kept docs sharing an n-gram with the
     benchmark become drop_reason=contaminated; dropped docs keep their
     reason; duplicate urls are marked identically without fan-out."""
-    from jobs.run_quality_filter import apply_decontamination
+    from harvesttext_spark.pipeline.stages import apply_decontamination
 
     bench = ["never train on this exact evaluation passage at all"]
     rows = [
@@ -766,7 +779,7 @@ def test_url_risk_filter_stage(spark):
     """--max-url-risk: pure column-math scoring; kept docs above the
     threshold drop as url_risk; custom keyword lists override; already-
     dropped docs keep their reason."""
-    from jobs.run_quality_filter import apply_url_risk_filter
+    from harvesttext_spark.pipeline.stages import apply_url_risk_filter
 
     rows = [
         ("https://freepornhub.example/xxx", True, None),       # 2 hits
@@ -879,7 +892,7 @@ def test_cut_dup_spans_pre_pass(spark):
     first occurrence survives, null-text rows pass through."""
     import datetime as dt
 
-    from jobs.run_quality_filter import apply_pre_passes
+    from harvesttext_spark.pipeline.stages import apply_pre_passes
 
     run = "s1 s2 s3 s4 s5 s6 s7 s8"
     ts = dt.datetime(2024, 1, 1)
@@ -891,7 +904,7 @@ def test_cut_dup_spans_pre_pass(spark):
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
     got = {
         r["url"]: r["text"]
-        for r in apply_pre_passes(df, cut_dup_spans=8).collect()
+        for r in apply_pre_passes(df, job_args("--cut-dup-spans", "8")).collect()
     }
     assert got["https://a.example/1"] == f"{run} original body here"
     assert got["https://a.example/2"] == "other intro other outro"
@@ -985,7 +998,7 @@ def test_zh_policy_seg_makes_zh_stages_fire(spark, tmp_path):
 
     import pytest
 
-    from jobs.run_quality_filter import build_policy_fn, parse_args
+    from harvesttext_spark.pipeline.stages import build_policy_fn
 
     def args(*argv):
         return parse_args(["--output", str(tmp_path / "out"), *argv])
@@ -1039,8 +1052,8 @@ def test_fix_mojibake_stage(spark):
     corruption exactly)."""
     import datetime as dt
 
-    from jobs.run_quality_filter import apply_pre_passes
     from harvesttext_spark.functions.mojibake import MOJIBAKE_PAIRS, _sloppy_cp1252
+    from harvesttext_spark.pipeline.stages import apply_pre_passes
 
     for moji, fixed in MOJIBAKE_PAIRS:
         assert moji == _sloppy_cp1252(fixed.encode("utf-8"))
@@ -1055,7 +1068,7 @@ def test_fix_mojibake_stage(spark):
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
     got = {
         r["url"]: r["text"]
-        for r in apply_pre_passes(df, fix_mojibake=True).collect()
+        for r in apply_pre_passes(df, job_args("--fix-mojibake")).collect()
     }
     assert got["https://m.example/1"] == "Café — it’s “fine”"
     assert got["https://m.example/2"] == "already clean — café “fine”"
@@ -1072,19 +1085,17 @@ def test_stage_dir_lineage_cut_matches_persist_path(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from harvesttext_spark.pipeline import synthesize_pages
-    from jobs.run_quality_filter import apply_pre_passes
+    from harvesttext_spark.pipeline.stages import apply_pre_passes
 
     pages = synthesize_pages(spark, n=200, seed=17)
-    kw = dict(
-        fix_mojibake=True, url_dedup=True, boilerplate_min_df=3,
-        dedup_paragraphs=True, cut_dup_spans=8, exact_dedup=True,
-        minhash_jaccard=0.8,
-    )
     key = lambda r: (r["url"], r["text"])
-    mem = sorted(map(key, apply_pre_passes(pages, **kw).select("url", "text").collect()))
+    mem = sorted(
+        map(key, apply_pre_passes(pages, job_args(*ALL_PRE_PASSES)).select("url", "text").collect())
+    )
     sd = str(tmp_path / "stages")
+    disk_args = job_args(*ALL_PRE_PASSES, "--stage-dir", sd)
     disk = sorted(
-        map(key, apply_pre_passes(pages, stage_dir=sd, **kw).select("url", "text").collect())
+        map(key, apply_pre_passes(pages, disk_args).select("url", "text").collect())
     )
     assert mem == disk and len(mem) > 0
     stages = sorted(d for d in os.listdir(sd) if d.startswith("stage_"))
@@ -1100,14 +1111,10 @@ def test_in_memory_pre_passes_cut_lineage(spark):
     on this input), until plan analysis alone ran a 2g driver out of
     heap."""
     from harvesttext_spark.pipeline import synthesize_pages
-    from jobs.run_quality_filter import apply_pre_passes
+    from harvesttext_spark.pipeline.stages import apply_pre_passes
 
     pages = synthesize_pages(spark, n=200, seed=17)
-    out = apply_pre_passes(
-        pages, fix_mojibake=True, url_dedup=True, boilerplate_min_df=3,
-        dedup_paragraphs=True, cut_dup_spans=8, exact_dedup=True,
-        minhash_jaccard=0.8,
-    )
+    out = apply_pre_passes(pages, job_args(*ALL_PRE_PASSES))
     plan = out._jdf.queryExecution().logical()
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     assert out.count() > 0
@@ -1123,7 +1130,7 @@ def test_in_memory_model_stages_cut_lineage(spark, tmp_path, capsys):
 
     from harvesttext_spark.pipeline import synthesize_pages
     from harvesttext_spark.pipeline.quality_filter import quality_filter
-    from jobs.run_quality_filter import apply_model_stages, parse_args
+    from harvesttext_spark.pipeline.stages import apply_model_stages
 
     spec = tmp_path / "mix.json"
     spec.write_text(json.dumps({"fractions": {"en": 0.5, "zh": 0.5}}))
@@ -1141,10 +1148,14 @@ def test_in_memory_model_stages_cut_lineage(spark, tmp_path, capsys):
     assert jsc.getPersistentRDDs().size() - before <= 1
     assert out.filter("keep").count() > 0
     cuts = [
-        ln.split(":")[0] for ln in capsys.readouterr().err.splitlines()
+        ln for ln in capsys.readouterr().err.splitlines()
         if ln.startswith("# model_stage")
     ]
-    assert cuts == ["# model_stage_00", "# model_stage_01", "# model_stage_02"]
+    assert [ln.split(":")[0] for ln in cuts] == [
+        "# model_stage_00", "# model_stage_01", "# model_stage_02"
+    ]
+    # each cut line names the stage it ends, after its time
+    assert [ln.split()[-1] for ln in cuts] == ["input", "domain_reputation", "mixture"]
     plan.rdd().unpersist(False)
 
 

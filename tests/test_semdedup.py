@@ -162,7 +162,7 @@ def test_semdedup_job_stage(spark):
     """--semdedup-threshold wiring: kept pages with the same word bag
     dedup to the lexicographically-smallest url; blank pages bypass;
     already-dropped rows keep their reason."""
-    from jobs.run_quality_filter import apply_semdedup
+    from harvesttext_spark.pipeline.stages import apply_semdedup
 
     text = "spark engines shuffle data across partitions every day"
     rows = [
@@ -352,7 +352,7 @@ def test_train_semdedup_centroids_two_level_path(spark):
 def test_semdedup_job_stage_trained_centroids(spark):
     """--semdedup-centroids trained wiring: same dup/bypass semantics
     as the fixture path on the job-stage fixture."""
-    from jobs.run_quality_filter import apply_semdedup
+    from harvesttext_spark.pipeline.stages import apply_semdedup
 
     text = "spark engines shuffle data across partitions every day"
     rows = [
